@@ -162,12 +162,11 @@ def run_cdc_apply(
     epochs_per_batch: int = 5,
     body_words: int | None = None,
     extractor: str = "arrow",
-    winner_mode: str = "full",
     events_dir: str | None = None,
 ) -> dict:
     """Replay a deterministic event log through the full pipeline into a
     fresh lakehouse table. Returns throughput stats. ``events_dir`` reuses a
-    pre-generated log (A/B runs share one input)."""
+    pre-generated log (repeated runs share one input)."""
     from cosmwasm_etl_spark.plans.pipeline import CdcPipeline, create_pages_table
 
     stage_root = os.environ.get("SPARK_GRAFT_BENCH_DIR", "/dev/shm/spark_graft")
@@ -187,9 +186,7 @@ def run_cdc_apply(
         pipe = CdcPipeline(
             spark, table, os.path.join(work, "work"),
             sink_mode=os.environ.get("SPARK_GRAFT_SINK_MODE", "mor"),
-            quarantine_mode="deferred",
             extractor=extractor,
-            winner_mode=winner_mode,
         )
         t0 = time.time()
         pipe.run_replay(events, epochs_per_batch=epochs_per_batch)
@@ -256,10 +253,7 @@ def run_stream_state_ab(spark, n_events: int) -> dict:
             table = create_pages_table(
                 spark, os.path.join(work, f"pagesA{i}"), num_buckets=max(CPUS, 16)
             )
-            pipe = CdcPipeline(
-                spark, table, os.path.join(work, f"wA{i}"),
-                sink_mode="mor", quarantine_mode="deferred",
-            )
+            pipe = CdcPipeline(spark, table, os.path.join(work, f"wA{i}"), sink_mode="mor")
             t0 = time.time()
             run_stream_available_now(
                 spark, pipe, events_dir, os.path.join(work, f"ckA{i}"),
@@ -329,10 +323,7 @@ def run_ingest_dedup_ab(spark, n_events: int) -> dict:
             table = create_pages_table(
                 spark, os.path.join(work, f"pages{i}"), num_buckets=max(CPUS, 16)
             )
-            pipe = CdcPipeline(
-                spark, table, os.path.join(work, f"w{i}"),
-                sink_mode="mor", quarantine_mode="deferred",
-            )
+            pipe = CdcPipeline(spark, table, os.path.join(work, f"w{i}"), sink_mode="mor")
             idx = None
             if with_index:
                 idx = IngestNearDupIndex(
@@ -387,7 +378,6 @@ def _cdc_only(
     n_events: int,
     body_words: int | None = None,
     extractor: str = "arrow",
-    winner_mode: str = "full",
 ) -> None:
     """Subprocess entry: one CDC apply run in a FRESH JVM (scaling runs must
     not share a JVM — a stopped SparkSession leaves its heap behind and the
@@ -404,8 +394,7 @@ def _cdc_only(
     epb = int(os.environ.get("SPARK_GRAFT_EPB", "5"))
     try:
         print(json.dumps(run_cdc_apply(
-            s, n_events, epochs_per_batch=epb, body_words=body_words,
-            extractor=extractor, winner_mode=winner_mode,
+            s, n_events, epochs_per_batch=epb, body_words=body_words, extractor=extractor,
         )))
     finally:
         try:
@@ -463,7 +452,7 @@ def _cdc_single(
             return CdcPipeline(
                 s, table, os.path.join(work, f"w{i}"),
                 sink_mode=os.environ.get("SPARK_GRAFT_SINK_MODE", "mor"),
-                quarantine_mode="deferred", extractor=extractor,
+                extractor=extractor,
             )
 
         half = events.filter(F_seq_mod_2())  # deterministic half for warm-up
@@ -871,8 +860,7 @@ def main() -> None:
     if len(sys.argv) >= 4 and sys.argv[1] == "--cdc-only":
         body = int(sys.argv[4]) if len(sys.argv) >= 5 else None
         extractor = sys.argv[5] if len(sys.argv) >= 6 else "arrow"
-        winner_mode = sys.argv[6] if len(sys.argv) >= 7 else "full"
-        _cdc_only(int(sys.argv[2]), int(sys.argv[3]), body, extractor, winner_mode)
+        _cdc_only(int(sys.argv[2]), int(sys.argv[3]), body, extractor)
         return
     if len(sys.argv) >= 4 and sys.argv[1] == "--cdc-single":
         body = int(sys.argv[4]) if len(sys.argv) >= 5 else None
@@ -885,55 +873,31 @@ def main() -> None:
 
     spark = make_session(CPUS)
     try:
-        # Interleaved same-window A/B: the current two-phase key-only plan
-        # ("keys", round-2 shape) alternates with the round-1-shape
-        # full-row-dedup plan ("full") over ONE shared pre-generated event
-        # log inside one session. The host's bandwidth swings 3-4x between
-        # minutes, so only an interleaved run can attribute a throughput
-        # delta to the PLAN rather than the window; best-of-N per plan
-        # de-noises CPU-steal spikes without changing the workload.
+        # Headline CDC number: best-of-N replays over ONE shared
+        # pre-generated event log inside one session; best-of-N de-noises
+        # CPU-steal spikes without changing the workload.
         headline_repeats = int(os.environ.get("SPARK_GRAFT_HEADLINE_REPEATS", "2"))
         stage_root = os.environ.get("SPARK_GRAFT_BENCH_DIR", "/dev/shm/spark_graft")
         os.makedirs(stage_root, exist_ok=True)
-        shared = tempfile.mkdtemp(prefix="bench_ab_", dir=stage_root)
+        shared = tempfile.mkdtemp(prefix="bench_cdc_log_", dir=stage_root)
         try:
             events_dir = gen_event_log(
                 spark, N_CDC_EVENTS, BODY_WORDS, os.path.join(shared, "events")
             )
-            best: dict[str, dict] = {}
+            best: dict | None = None
             attempts = []
             for _ in range(headline_repeats):
-                # default plan first: it absorbs any residual first-run
-                # warm-up penalty (conservative for the headline number)
-                for mode in ("full", "keys"):
-                    c = run_cdc_apply(
-                        spark, N_CDC_EVENTS, winner_mode=mode, events_dir=events_dir
-                    )
-                    attempts.append(
-                        {"winner_mode": mode, **{
-                            k: c[k] for k in ("events_per_sec", "events_per_sec_steady",
-                                              "events_per_sec_peak", "batch_ms") if k in c
-                        }}
-                    )
-                    key = c.get("events_per_sec_peak") or c["events_per_sec"]
-                    cur = best.get(mode)
-                    if cur is None or key > (cur.get("events_per_sec_peak") or cur["events_per_sec"]):
-                        best[mode] = c
+                c = run_cdc_apply(spark, N_CDC_EVENTS, events_dir=events_dir)
+                attempts.append({
+                    k: c[k] for k in ("events_per_sec", "events_per_sec_steady",
+                                      "events_per_sec_peak", "batch_ms") if k in c
+                })
+                key = c.get("events_per_sec_peak") or c["events_per_sec"]
+                if best is None or key > (best.get("events_per_sec_peak") or best["events_per_sec"]):
+                    best = c
         finally:
             shutil.rmtree(shared, ignore_errors=True)
-        # the headline north-star number is the DEFAULT plan ("full" — the
-        # same-window A/B measured it 2.15x the two-phase plan, BENCH.md)
-        out["cdc"] = {**best["full"], "attempts": attempts}
-        kp = best["keys"].get("events_per_sec_steady") or best["keys"]["events_per_sec"]
-        fp = best["full"].get("events_per_sec_steady") or best["full"]["events_per_sec"]
-        out["cdc_ab"] = {
-            "same_window": True,
-            "keys_steady": kp,
-            "full_steady": fp,
-            "keys_peak": best["keys"].get("events_per_sec_peak"),
-            "full_peak": best["full"].get("events_per_sec_peak"),
-            "keys_over_full": round(kp / fp, 3) if fp else None,
-        }
+        out["cdc"] = {**best, "attempts": attempts}
         qt = run_queries(spark)
         out["queries"] = qt
         if os.environ.get("SPARK_GRAFT_SKIP_STREAM_AB") != "1":

@@ -2,7 +2,7 @@
 reference's SQL/Go dataflow operators (SURVEY.md §2.3-§2.7)."""
 
 from cosmwasm_etl_spark.operators.asof import asof_join
-from cosmwasm_etl_spark.operators.dedup_window import latest_wins_agg, latest_wins_window
+from cosmwasm_etl_spark.operators.dedup_window import latest_wins_agg
 from cosmwasm_etl_spark.operators.ingest_dedup import IngestNearDupIndex
 from cosmwasm_etl_spark.operators.rank_anti import multiset_anti_join
 from cosmwasm_etl_spark.operators.topk import first_per_key, top1_per_key
@@ -12,7 +12,6 @@ __all__ = [
     "asof_join",
     "IngestNearDupIndex",
     "latest_wins_agg",
-    "latest_wins_window",
     "multiset_anti_join",
     "first_per_key",
     "top1_per_key",

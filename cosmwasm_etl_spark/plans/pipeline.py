@@ -2,28 +2,33 @@
 parser replay loop (`/root/reference/parser/dex/dex.go:87-267`).
 
 Per micro-batch (= a contiguous range of event epochs; the reference's
-per-height loop, batched):
+per-height loop, batched), one apply path:
 
-1. **quarantine check** every event (Arrow decode-validity pass) — the
-   AmbiguousEventError path (`pkg/eventlog/util.go:58-114`); flagged events
-   land in the dead-letter store WITH raw payload ("raw events are never
-   lost", `parser/dex/dex.go:186`) and their effects are deferred;
+1. **validity check** on every event (JVM fast path, Arrow decode pass on
+   the masked residue) — the AmbiguousEventError path
+   (`pkg/eventlog/util.go:58-114`); flagged events are kept out of the
+   table and land in the dead-letter store WITH raw payload ("raw events
+   are never lost", `parser/dex/dex.go:186`);
 2. **latest-wins dedup** per url over valid events (W5) — map-side-combining
    ``max_by`` aggregate (hot-domain-skew-proof, see operators.dedup_window);
-3. **extraction** (html→text pandas UDF) on dedup *winners only* —
+3. **bucket repartition** of the winners on the table's bucket function;
+4. **extraction** (html→text pandas UDF) on dedup *winners only* —
    winners ≪ events, so the Python-side work is minimized;
-4. **MERGE** into the lakehouse pages table in ONE atomic commit carrying
-   the batch id + high-watermark — the analog of the reference's
-   single-Postgres-transaction insert + synced-height CAS
-   (`parser/dex/repo/repository.go:98-122`);
-5. **lineage** row (batch id, seq range, affected buckets, snapshot version,
+5. **MERGE** (copy-on-write) or **delta append** (merge-on-read) into the
+   lakehouse pages table in ONE atomic commit carrying the batch id +
+   high-watermark — the analog of the reference's single-Postgres-
+   transaction insert + synced-height CAS
+   (`parser/dex/repo/repository.go:98-122`). The dead-letter capture runs
+   after the sink's write job and BEFORE that commit, serially, so a
+   committed batch always has its dead letters on disk;
+6. **lineage** row (batch id, seq range, affected buckets, snapshot version,
    counts, duration) — T12 observability, idempotently keyed by batch id.
 
 Exactly-once: batch boundaries are a pure function of configuration
 (``epochs_per_batch``), the commit is atomic, and the batch id is recorded in
 the commit summary — replaying after any crash skips already-committed
-batches and reconverges to the identical table state (tested in
-tests/test_replay.py).
+batches and reconverges to the identical table state and dead-letter store
+(tested in tests/test_replay.py).
 """
 
 from __future__ import annotations
@@ -43,7 +48,7 @@ from cosmwasm_etl_spark.functions.extraction import (
 )
 from cosmwasm_etl_spark.lakehouse import LakeTable
 from cosmwasm_etl_spark.lakehouse.schema import _parse_type as _parse_lake_type
-from cosmwasm_etl_spark.operators.dedup_window import latest_wins_agg, latest_wins_window
+from cosmwasm_etl_spark.operators.dedup_window import latest_wins_agg
 from cosmwasm_etl_spark.operators.validation import full_outer_diff
 
 PAGES_SCHEMA = T.StructType(
@@ -69,11 +74,9 @@ PAGES_SCHEMA = T.StructType(
 
 PAGE_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
 
-# reserved ids outside the replay/streaming batch-id space (which is >= 0):
-# the deferred dead-letter capture directory, and the namespace offset for
-# quarantine-retry commit epochs (so a retry can never collide with — and
-# silently skip on — a regular batch epoch).
-_DEFERRED_BATCH_ID = -1
+# namespace offset for quarantine-retry commit epochs, outside the
+# replay/streaming batch-id space (which is >= 0), so a retry can never
+# collide with — and silently skip on — a regular batch epoch.
 _RETRY_EPOCH_BASE = -1000
 
 # UTF-8 encoding of U+FFFD. The literal-replacement-char fast-path check is
@@ -128,15 +131,11 @@ class CdcPipeline:
         spark: SparkSession,
         table: LakeTable,
         work_dir: str,
-        dedup_strategy: str = "agg",
-        salt_buckets: int | None = 16,
         sink_mode: str | None = None,
         compact_every: int = 8,
         extract_versions: list[tuple[int, int]] | None = None,
-        quarantine_mode: str = "batch",
         extractor: str = "arrow",
         post_commit=None,
-        winner_mode: str = "full",
         canonicalize_keys: bool = False,
     ):
         """``sink_mode``:
@@ -157,23 +156,20 @@ class CdcPipeline:
         self.lineage_dir = os.path.join(self.work_dir, "lineage")
         os.makedirs(self.quarantine_dir, exist_ok=True)
         os.makedirs(self.lineage_dir, exist_ok=True)
-        self.dedup_strategy = dedup_strategy
-        self.salt_buckets = salt_buckets
+        st = table.state()
         # sink_mode=None adopts the TABLE's recorded mode (the commit log
         # remembers whether deltas were ever written) — a second session
         # opening an ingest table gets correct reads without out-of-band
         # coordination. Explicit "cow" over live un-compacted deltas is
         # refused: that read silently returns superseded rows.
         if sink_mode is None:
-            sink_mode = table.state().sink_mode or "cow"
-        elif sink_mode == "cow":
-            st = table.state()
-            if st.delta_files:
-                raise ValueError(
-                    "table has un-compacted delta files (written in mor mode); "
-                    "a cow-mode read would return superseded rows — pass "
-                    "sink_mode='mor' (or None to adopt the recorded mode)"
-                )
+            sink_mode = st.sink_mode or "cow"
+        elif sink_mode == "cow" and st.delta_files:
+            raise ValueError(
+                "table has un-compacted delta files (written in mor mode); "
+                "a cow-mode read would return superseded rows — pass "
+                "sink_mode='mor' (or None to adopt the recorded mode)"
+            )
         if sink_mode not in ("cow", "mor"):
             raise ValueError(f"unknown sink_mode: {sink_mode}")
         self.sink_mode = sink_mode
@@ -181,15 +177,6 @@ class CdcPipeline:
         self._applied_since_compact = 0
         # M5 version dispatch: [(from_epoch, extractor_version), ...]
         self.extract_versions = sorted(extract_versions) if extract_versions else None
-        if quarantine_mode not in ("batch", "deferred"):
-            raise ValueError(f"unknown quarantine_mode: {quarantine_mode}")
-        # "batch": dead-letter rows are spilled within each micro-batch (the
-        # reference's per-height behavior). "deferred": run_replay captures
-        # them in ONE pass at the end — halves the per-batch scan count; the
-        # reference itself only *retries* quarantine on startup/periodically
-        # (`parser/dex/dex.go:93-100`), so capture lag is semantically safe:
-        # raw events remain in the immutable log either way.
-        self.quarantine_mode = quarantine_mode
         # "arrow" (default): the byte-identical pandas-UDF extraction — the
         # CORRECTNESS path. "jvm": a cost-representative pure-JVM extraction
         # (regexp_replace chain) used ONLY as the scaling CONTROL in
@@ -200,29 +187,6 @@ class CdcPipeline:
         if extractor not in ("arrow", "jvm"):
             raise ValueError(f"unknown extractor: {extractor}")
         self.extractor = extractor
-        # "full" (default): single-phase dedup — ONE scan of the batch, one
-        # hash-aggregate exchange of whole rows. Hot-key safe: max_by's
-        # map-side partial aggregation collapses every key to one candidate
-        # row per map task BEFORE the exchange, so a url with 10^6 updates
-        # ships <= n_map_tasks rows, never 10^6. "keys": two-phase — winner
-        # selection on ~24 B/event key columns, payloads re-fetched by a
-        # bounded broadcast seq-join; the exchange is 333x narrower but the
-        # batch is SCANNED TWICE and the broadcast build is an extra job.
-        # The round-3 interleaved same-window A/B measured full at 2.15x
-        # keys' steady throughput on 8 KB pages (38.9k vs 18.1k ev/s,
-        # BENCH.md) — the exchange that "keys" saves is already collapsed
-        # by partial aggregation, while its second scan is real extra I/O.
-        # Keep "keys" for clusters where shuffle bytes are the binding
-        # constraint (e.g. payload >> page-cache, remote shuffle service).
-        # "bucket": fused single-exchange variant — repartition once on the
-        # table's bucket function, dedup per (bucket, url) with no further
-        # exchange (the bucket partitioning already clusters urls), output
-        # lands pre-placed for the sink. Trades map-side combine (none —
-        # the exchange precedes the agg) for one less full shuffle stage;
-        # prefer "full" when per-map-task key duplication is high.
-        if winner_mode not in ("keys", "full", "bucket"):
-            raise ValueError(f"unknown winner_mode: {winner_mode}")
-        self.winner_mode = winner_mode
         # T6 downstream-task barrier (the aggregator scheduler-DAG analog,
         # `aggregator/aggregator.go:69-84`): called AFTER each batch's
         # atomic commit as post_commit(events_df, batch_id, stats). The
@@ -248,7 +212,6 @@ class CdcPipeline:
         # rows (the EVOLUTION_ID_STRIDE hazard class), so it is refused.
         self.canonicalize_keys = bool(canonicalize_keys)
         self._key_norm = "canonical" if self.canonicalize_keys else "exact"
-        st = table.state()
         recorded = st.key_norm or ("exact" if st.epochs else "")
         if recorded and recorded != self._key_norm:
             raise ValueError(
@@ -268,35 +231,13 @@ class CdcPipeline:
     # ------------------------------------------------------------ single batch
 
     def _dedup(self, df: DataFrame) -> DataFrame:
-        if self.dedup_strategy == "agg":
-            return latest_wins_agg(df, key="url", order_cols=["warc_ts", "seq"])
-        return latest_wins_window(
-            df, key="url", order_cols=["warc_ts", "seq"], salt_buckets=self.salt_buckets
-        )
+        """Latest-wins per url over (warc_ts, seq) — the pipeline's one
+        latest-wins call: batch dedup, MOR read resolution, compaction,
+        quarantine retry and the audit oracle all go through it."""
+        return latest_wins_agg(df, key="url", order_cols=["warc_ts", "seq"])
 
-    def _winner_seqs(self, valid: DataFrame) -> DataFrame:
-        """Latest-wins winner selection on the KEY COLUMNS ONLY.
-
-        The W5 dedup itself needs just (url, warc_ts, seq) — three narrow
-        columns — so the aggregate's exchange moves ~24 B/event instead of
-        the full 8 KB html payload (333× less shuffle traffic; the payload is
-        fetched afterwards by a broadcast seq-join). ``seq`` is globally
-        unique, so the surviving seq set identifies winner rows exactly."""
-        keys = valid.select("url", "warc_ts", "seq")
-        return self._dedup(keys).select("seq")
-
-    def _fetch_winners(self, events: DataFrame, winner_seqs: DataFrame) -> DataFrame:
-        """Join the full-width events back to the winner seq set
-        (winner_mode="keys" only — always per-micro-batch).
-
-        The seq set is one long column bounded by the micro-batch's distinct
-        key count (itself bounded by backpressure/epochs_per_batch), so the
-        forced broadcast is safe by construction; the events side is NEVER
-        shuffled — its 8 KB payloads stay in their scan partitions until the
-        single bucket repartition before the sink write. (The full-log audit
-        does NOT come through here: its winner set is corpus-sized, so
-        expected_state uses the single-phase dedup instead.)"""
-        return events.join(F.broadcast(winner_seqs), "seq")
+    # MOR read resolution and compaction reducer (same operator)
+    _resolve_latest = _dedup
 
     def apply_batch(self, events: DataFrame, batch_id: int) -> dict:
         """Apply one micro-batch of change events. Idempotent on batch_id.
@@ -307,11 +248,14 @@ class CdcPipeline:
         seq range, quarantine count) collected *during* that job via
         ``Observation`` metrics. No ``persist()`` of raw html (8 KB/page
         payloads through the JVM heap cause GC thrash), no second stats
-        pass. The rare quarantine spill re-reads the source slice only when
-        the observed quarantine count is non-zero.
+        pass. The rare dead-letter capture re-reads the source slice only
+        when the observed quarantine count is non-zero, and it runs before
+        the atomic commit: a crash in it leaves the batch uncommitted, so a
+        replay re-applies it and captures its dead letters.
         """
         events = self._normalize(events)
-        if batch_id in self.table.committed_epochs():
+        st = self.table.state()
+        if batch_id in st.epochs:
             stats = {"batch_id": batch_id, "skipped": True}
             if self.post_commit is not None:
                 # replay healing: downstream tasks may have crashed after
@@ -366,42 +310,13 @@ class CdcPipeline:
             F.count("__q_err").alias("nq"),
         )
         valid = ev.filter(F.col("__q_err").isNull()).drop("__q_err")
-        n_buckets = self.table.state().num_buckets
-        # Winner selection + bucket placement (see winner_mode in __init__):
-        # - "bucket": FUSED — one repartition on the table's bucket
-        #   function, then a per-(bucket, url) max_by agg. The repartition's
-        #   HashPartitioning(__b) already satisfies the aggregate's
-        #   ClusteredDistribution(__b, url) (same url ⇒ same bucket ⇒ same
-        #   partition), so the agg adds NO second exchange and its output is
-        #   already bucket-placed for the sink: the whole apply path has
-        #   exactly ONE exchange.
-        # - "full": dedup exchange on url (map-side combined), then a
-        #   second exchange placing winners by bucket.
-        # - "keys": key-only dedup + broadcast payload re-fetch, then the
-        #   bucket exchange.
-        # Extraction always runs AFTER placement, so shuffled bytes are raw
-        # html, never html+text.
-        if self.winner_mode == "bucket":
-            bexpr = self.table._bucket_expr("url", n_buckets)
-            cols = valid.columns
-            row = F.struct(*[F.col(c) for c in cols])
-            order = F.struct(F.col("warc_ts"), F.col("seq"))
-            placed = (
-                valid.withColumn("__b", bexpr)
-                .repartition(max(n_buckets, 1), F.col("__b"))
-                .groupBy("__b", "url")
-                .agg(F.max_by(row, order).alias("__r"))
-                .select(*[F.col(f"__r.{c}").alias(c) for c in cols])
-            )
-        else:
-            if self.winner_mode == "full":
-                winners = self._dedup(valid)
-            else:
-                winner_seqs = self._winner_seqs(valid)
-                winners = self._fetch_winners(events, winner_seqs)
-            placed = winners.withColumn(
-                "__b", self.table._bucket_expr("url", n_buckets)
-            ).repartition(max(n_buckets, 1), F.col("__b")).drop("__b")
+        # Winners are placed on the table's bucket function before
+        # extraction, so the shuffled bytes are raw html, never html+text.
+        # The dedup exchange is map-side combined (one candidate row per url
+        # per map task), so it carries little beyond the winners themselves.
+        placed = self._dedup(valid).withColumn(
+            "__b", self.table._bucket_expr("url", st.num_buckets)
+        ).repartition(max(st.num_buckets, 1), F.col("__b")).drop("__b")
         if self.extract_versions:
             extracted = with_extracted_text_versioned(
                 placed, self.extract_versions, epoch_col="epoch", html_col="html", out_text="text"
@@ -427,15 +342,13 @@ class CdcPipeline:
         # out-of-order streaming delivery); NULL only when no name of the
         # field id ever appears (the read-side half lives in
         # lakehouse.schema.align_to)
-        tbl_state = self.table.state()
-        cur = tbl_state.schema
         cols = []
-        for f in cur.fields:
+        for f in st.schema.fields:
             src = f.name if f.name in ok.columns else None
             if src is None:
-                for sv in sorted(tbl_state.schemas, reverse=True):
+                for sv in sorted(st.schemas, reverse=True):
                     old = next(
-                        (g.name for g in tbl_state.schemas[sv].fields if g.id == f.id),
+                        (g.name for g in st.schemas[sv].fields if g.id == f.id),
                         None,
                     )
                     if old is not None and old in ok.columns:
@@ -471,8 +384,12 @@ class CdcPipeline:
         def _observed_summary() -> dict:
             # runs after the sink's write job (metrics available), before
             # the atomic commit — watermark + counts land IN the commit,
-            # exactly like the reference's single-transaction CAS.
+            # exactly like the reference's single-transaction CAS. The
+            # dead-letter capture runs here too, serially: if it fails the
+            # batch is not committed, so a replay re-applies and re-captures.
             got = _merged_obs()
+            if got["nq"]:
+                self._capture_quarantine(events, batch_id)
             return {
                 "watermark": got["max_seq"],
                 "n_events": got["n"],
@@ -496,12 +413,6 @@ class CdcPipeline:
             )
 
         got = _merged_obs()
-        n_events, max_seq = got["n"], got["max_seq"]
-        n_quarantined = int(got["nq"] or 0)
-
-        if n_quarantined and self.quarantine_mode == "batch":
-            self._capture_quarantine(events, batch_id)
-
         if self.sink_mode == "mor":
             self._applied_since_compact += 1
             if self._applied_since_compact >= self.compact_every:
@@ -511,10 +422,10 @@ class CdcPipeline:
         stats = {
             "batch_id": batch_id,
             "skipped": bool(res.get("skipped")),
-            "n_events": int(n_events or 0),
-            "n_quarantined": int(n_quarantined),
+            "n_events": got["n"],
+            "n_quarantined": got["nq"],
             "min_seq": int(got["min_seq"]) if got["min_seq"] is not None else None,
-            "max_seq": int(max_seq) if max_seq is not None else None,
+            "max_seq": int(got["max_seq"]) if got["max_seq"] is not None else None,
             "table_version": res.get("version"),
             "rows_after": res.get("rows_after"),
             "duration_ms": int((time.time() - t0) * 1000),
@@ -629,27 +540,6 @@ class CdcPipeline:
             return []
         first_b, last_b = int(bounds[0]) // epochs_per_batch, int(bounds[1]) // epochs_per_batch
         done = self.table.committed_epochs()
-        # Deferred dead-letter capture overlaps the batch applies (guide
-        # §2.6: independent jobs back-fill each other's idle tails): the
-        # pass re-scans the whole log — measured 9 s of a 46 s 1M-event
-        # replay when run serially after the last batch — and reads/writes
-        # nothing the applies touch, so its wall time hides behind the
-        # batches' AQE barriers and write tails. Joined (and its errors
-        # re-raised) before this method returns, so callers still observe
-        # completed capture.
-        q_thread = None
-        q_err: list[BaseException] = []
-        if self.quarantine_mode == "deferred":
-            import threading
-
-            def _capture() -> None:
-                try:
-                    self._capture_quarantine(events, _DEFERRED_BATCH_ID)
-                except BaseException as e:  # noqa: BLE001 — re-raised on join
-                    q_err.append(e)
-
-            q_thread = threading.Thread(target=_capture, daemon=True)
-            q_thread.start()
         all_stats = []
         for b in range(first_b, last_b + 1):
             lo, hi = b * epochs_per_batch, (b + 1) * epochs_per_batch
@@ -667,24 +557,9 @@ class CdcPipeline:
                 all_stats.append(stats)
                 continue
             all_stats.append(self.apply_batch(chunk, b))
-        if q_thread is not None:
-            # single amortized dead-letter pass over the WHOLE log, written
-            # to one fixed directory — unconditional (a crash-restarted
-            # replay reports skipped batches with no n_quarantined, so
-            # gating on stats would silently drop the capture) and
-            # idempotent across re-replays over a grown log (same dir is
-            # overwritten; no per-last-batch duplicate directories).
-            # Started before the first batch; completed here.
-            q_thread.join()
-            if q_err:
-                raise q_err[0]
         return all_stats
 
     # ------------------------------------------------------------ reads
-
-    def _resolve_latest(self, df: DataFrame) -> DataFrame:
-        """Latest-wins reducer over base+delta rows (MOR read resolution)."""
-        return latest_wins_agg(df, key="url", order_cols=["warc_ts", "seq"])
 
     def pages(self) -> DataFrame:
         """Active (non-tombstoned) pages: canonical input_hint columns plus
@@ -697,9 +572,6 @@ class CdcPipeline:
             df = self._resolve_latest(df)
         out_cols = [c for c in df.columns if c != "deleted"]
         return df.filter(~F.col("deleted")).select(*out_cols)
-
-    # alias kept for clarity in evolution tests
-    pages_evolved = pages
 
     def pages_for(
         self,
@@ -919,8 +791,7 @@ class CdcPipeline:
         staged = self.spark.read.parquet(staging)
 
         ok = staged.filter(F.col("__extract_err").isNull())
-        winners = latest_wins_agg(ok, key="url", order_cols=["warc_ts", "seq"])
-        batch = winners.select(
+        batch = self._dedup(ok).select(
             "url", "warc_ts", "html", "text", "lang", "seq",
             (F.col("op") == "delete").alias("deleted"),
         )

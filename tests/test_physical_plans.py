@@ -92,52 +92,6 @@ def test_simhash_plan_is_pure_jvm(spark, sf_dir):
     assert "partial_sum" in plan.lower()  # map-side combine of the bit votes
 
 
-def test_bucket_mode_apply_has_single_exchange(spark, tmp_path):
-    """winner_mode='bucket': one repartition on the table's bucket function;
-    the per-(bucket, url) aggregate must add NO second exchange (its
-    clustered-distribution requirement is satisfied by the bucket
-    partitioning) — the fused plan the mode exists for."""
-    from cosmwasm_etl_spark.sources.eventlog import synthetic_events, write_event_log
-
-    ev = synthetic_events(spark, 2_000, n_urls=200, events_per_epoch=500)
-    write_event_log(ev, str(tmp_path / "ev"), range_partitions=2)
-    events = spark.read.parquet(str(tmp_path / "ev"))
-    bexpr = F.pmod(F.xxhash64(F.col("url")), F.lit(8)).cast("int")
-    cols = events.columns
-    row = F.struct(*[F.col(c) for c in cols])
-    placed = (
-        events.withColumn("__b", bexpr)
-        .repartition(8, F.col("__b"))
-        .groupBy("__b", "url")
-        .agg(F.max_by(row, F.struct("warc_ts", "seq")).alias("__r"))
-        .select(*[F.col(f"__r.{c}").alias(c) for c in cols])
-    )
-    plan = _plan(placed)
-    assert plan.count("Exchange") == 1, plan
-
-
-def test_dedup_exchange_is_narrow(spark, tmp_path):
-    """Round-2 scaling fix: the winner-selection exchange must carry ONLY
-    the key columns (url, warc_ts, seq) — the 8 KB html payload stays out
-    of the dedup shuffle (333x less exchange traffic at crawl page sizes)."""
-    from cosmwasm_etl_spark.operators.dedup_window import latest_wins_agg
-    from cosmwasm_etl_spark.sources.eventlog import synthetic_events, write_event_log
-
-    ev = synthetic_events(spark, 2_000, n_urls=200, events_per_epoch=500)
-    write_event_log(ev, str(tmp_path / "ev"), range_partitions=2)
-    events = spark.read.parquet(str(tmp_path / "ev"))
-    keys = events.select("url", "warc_ts", "seq")
-    winner_seqs = latest_wins_agg(keys, key="url", order_cols=["warc_ts", "seq"]).select("seq")
-    fetched = events.join(F.broadcast(winner_seqs), "seq")
-    plan = _formatted(fetched)
-    # the scan feeding the aggregate exchange reads only the 3 key columns
-    scans = [seg.splitlines()[0] for seg in plan.split("ReadSchema: ")[1:]]
-    assert any("html" not in s and "url" in s for s in scans), scans
-    # and the payload side is joined via broadcast, never shuffled
-    assert "BroadcastHashJoin" in plan
-    assert plan.count("Exchange hashpartitioning") <= 1  # only the key agg
-
-
 def test_gopher_quality_is_zero_shuffle_projection(spark, sf_dir):
     """The repetition stats ride ONE scan with no exchange — the
     longest-run-in-sorted-array form replaces the textbook explode +
